@@ -79,6 +79,13 @@ def ensure_session_conf(spark: SparkSession) -> None:
     # that the loader, not the session, owns the unit decision.
 
 
+def sql_ident(name: str) -> str:
+    """A column name as a Spark-SQL identifier, for splicing into SQL
+    strings: backquoted, embedded backquotes doubled, so names with
+    spaces, dashes or reserved words parse as one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dec_to_double_portable(s: Column) -> Column:
     """Decimal → double conversion that is bit-identical across engines
     at ANY magnitude (round-6 sf1 find): a direct cast of a DECIMAL(p,6)

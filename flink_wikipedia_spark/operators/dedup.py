@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_wikipedia_spark.functions.compat import stable_token_hash
+from flink_wikipedia_spark.functions.compat import sql_ident, stable_token_hash
 from flink_wikipedia_spark.functions.constants import (
     HM_MOD,
     MINHASH_A,
@@ -98,9 +98,10 @@ def minhash_sig_cols(text_col: str = "text") -> list[Column]:
     simhash_fingerprints rationale above: the DSL form paid a py4j
     round trip per lambda/plumbing node — hundreds per plan build; the
     string parses to the identical Catalyst tree, bit-equality pinned
-    by test_rowlocal_sigs_match_batch_operator)."""
+    by test_rowlocal_sigs_match_batch_operator). ``text_col`` is a column
+    name of any form; it is backquoted before splicing."""
     hms_sql = (
-        f"transform(filter(split(lower({text_col}), ' '), t -> t != ''), "
+        f"transform(filter(split(lower({sql_ident(text_col)}), ' '), t -> t != ''), "
         f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) "
         f"% {HM_MOD})"
     )

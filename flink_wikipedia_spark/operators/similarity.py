@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_wikipedia_spark.functions.compat import sql_ident
 from flink_wikipedia_spark.functions.constants import LSH_NUM_PLANES, LSH_PLANES
 
 
@@ -42,8 +43,9 @@ def _fold_sum(arr: Column) -> Column:
 #
 # CONTRACT (ADVICE r15): arguments are spliced VERBATIM as raw SQL
 # fragments — a name that is not a bare identifier (spaces, dashes,
-# reserved words) must be backquoted by the CALLER (`a b`), exactly as
-# in any spark.sql text; the Column overload handles arbitrary names.
+# reserved words) must be backquoted by the CALLER
+# (functions/compat.sql_ident), exactly as in any spark.sql text; the
+# Column overload handles arbitrary names.
 
 def sql_dot_spark(a: str, b: str) -> str:
     return (
@@ -215,12 +217,12 @@ def ivf_assign(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("_cent")
     )
     scored = vectors.crossJoin(F.broadcast(c)).selectExpr(
-        id_col,
-        vec_col,
+        sql_ident(id_col),
+        sql_ident(vec_col),
         "centroid_id",
         # string-form fold: one JVM parse, not ~300 py4j round trips
         # (see sql_dot_spark block) — identical Catalyst tree
-        f"round({sql_dist2_spark(vec_col, '_cent')}, 6) AS _d2",
+        f"round({sql_dist2_spark(sql_ident(vec_col), '_cent')}, 6) AS _d2",
     )
     w = Window.partitionBy(id_col).orderBy(F.col("_d2").asc(), F.col("centroid_id").asc())
     return (

@@ -32,91 +32,66 @@ from flink_wikipedia_spark.plans import queries_curation  # noqa: E402,F401
 #      below so the verdict can check the gate outcome against a
 #      written prediction.
 #
-# ROUND-15 WINDOW — computed by ``tools/rotate_window.py --changed
-# q_bpe_merges q_bpe_encode q_bpe_vocab`` (this list is the tool's
-# verbatim output; re-run mid-round if the registry grows so new code
-# earns driver evidence in its own round).
-# Composition: rule 2 puts the ONE name with no driver record first
-# (q_bpe_ids — the tokenizer loop closed: per-document subword
-# token-id sequences with an exact md5-CSV fingerprint oracle); rule 3
-# adds the three BPE names touched by the ADVICE-r14 persist-leak fix
-# in bpe_learn_merges (distributed-path base frame now released after
-# round 1 — values unchanged, but the changed-code rule is about
-# evidence, not expected deltas); rule 4 holds the TWELVE family
-# anchors + flagship; rule 5 fills the remaining 33 slots
-# (50 − 1 flagship − 1 new − 3 changed − 12 anchors) with the stalest
-# evidence: the 10 remaining r11-vintage names (the q_tpch_q2/q3/q5/
-# q6/q8 + q15/q20/q22 TPC-H tail, q_unpivot_event_daily, q_vocab_ids)
-# then 23 r12-vintage names alphabetically (q_ann_ivf …
-# q_pagerank_parts_suppliers; the rest of the r12 band —
-# q_union_all_actions, q_unpivot_metrics et al. — waits for r16).
-# Expected r15 outcome: **47/50 hash-green, THREE rows-only-by-design
-# in-window** — the stalest-evidence rule reached the r12 band, which
-# contains the registry's only no-oracle names
-# (q_ann_ivfpq_refined, q_approx_distinct_users,
-# q_approx_percentile_value — cross-engine sketches, each
-# property-pinned with an oracled exact twin that is ALSO in-window:
-# q_distinct_users, q_median_value, q_ann_ivf).
-#
-# NOTE for the r16 rotation (pre-declared): once CORRECTNESS_r15.json
-# lands it becomes the rotation input — run ``python
-# tools/rotate_window.py --changed <r16-changed-names>``, paste its
-# output here verbatim, and update ROUND_CHANGED + the families pin in
-# tests/test_plan_audit.py in the same commit
-# (test_priority_window_is_rotation_tool_output fails on a stale
-# window by design, forcing the rotation at round start).
+# The window below is the verbatim output of ``python
+# tools/rotate_window.py --changed <this round's changed names>`` (the
+# names are tests/test_plan_audit.ROUND_CHANGED). When the driver
+# commits a new CORRECTNESS_rN.json, re-run the tool, paste its output
+# here and update ROUND_CHANGED + the families pin in
+# tests/test_plan_audit.py in the same commit;
+# test_priority_window_is_rotation_tool_output fails on a stale window
+# by design. In-window names with no oracle (rows-only by design) are
+# listed in the tool's pre-declaration block.
 _PRIORITY = [
-
-    "q_windowed_edit_size",  # r14
-    "q_bpe_ids",  # NEW (no driver row)
-    "q_bpe_encode",  # r14
-    "q_bpe_merges",  # r14
-    "q_bpe_vocab",  # r14
-    "q_filter_events",  # r14
-    "q_json_extract",  # r14
-    "q_word_count",  # r14
-    "q_pii_redact",  # r14
-    "q_dedup_docs_exact",  # r14
-    "q_multimodal_decode",  # r14
-    "q_similarity_lsh",  # r14
-    "q_join_orders_customer",  # r14
-    "q_tpch_q1_pricing_summary",  # r14
-    "q_rank_functions",  # r14
-    "q_dedup_components",  # r14
-    "q_keyby_agg_edit_size",  # r14
-    "q_tpch_q15_top_supplier",  # r11
-    "q_tpch_q20_excess_stock_suppliers",  # r11
-    "q_tpch_q22_dormant_accounts",  # r11
-    "q_tpch_q2_min_cost_supplier",  # r11
-    "q_tpch_q3_shipping_priority",  # r11
-    "q_tpch_q5_regional_revenue",  # r11
-    "q_tpch_q6_forecast_revenue",  # r11
-    "q_tpch_q8_market_share",  # r11
-    "q_unpivot_event_daily",  # r11
-    "q_vocab_ids",  # r11
-    "q_ann_ivf",  # r12
-    "q_ann_ivfpq_refined",  # r12
-    "q_antijoin_inactive_users",  # r12
-    "q_approx_distinct_users",  # r12
-    "q_approx_percentile_value",  # r12
-    "q_c4_quality",  # r12
-    "q_collect_user_lists",  # r12
-    "q_cube_orders",  # r12
-    "q_distinct_users",  # r12
-    "q_embedding_neardup_lsh",  # r12
-    "q_fingerprint",  # r12
-    "q_gopher_quality",  # r12
-    "q_hash_sample",  # r12
-    "q_having_active_users",  # r12
-    "q_ivfpq_search",  # r12
-    "q_lang_stats",  # r12
-    "q_like_filter_parts",  # r12
-    "q_median_value",  # r12
-    "q_minhash_dedup_clusters",  # r12
-    "q_minhash_signatures",  # r12
-    "q_ngram_jaccard_pairs",  # r12
-    "q_pagerank_converged",  # r12
-    "q_pagerank_parts_suppliers",  # r12
+    "q_windowed_edit_size",  # r16
+    "q_ann_ivf",  # r16
+    "q_ann_ivfpq_refined",  # r16
+    "q_embedding_neardup_lsh",  # r16
+    "q_ivfpq_search",  # r16
+    "q_lm_perplexity",  # r14
+    "q_pq_codes",  # r12
+    "q_semantic_dedup",  # r12
+    "q_tfidf_top_terms",  # r13
+    "q_tpch_q16_supplier_variety",  # r13
+    "q_filter_events",  # r16
+    "q_json_extract",  # r16
+    "q_word_count",  # r16
+    "q_pii_redact",  # r16
+    "q_dedup_docs_exact",  # r16
+    "q_multimodal_decode",  # r16
+    "q_similarity_lsh",  # r16
+    "q_join_orders_customer",  # r16
+    "q_tpch_q1_pricing_summary",  # r16
+    "q_rank_functions",  # r16
+    "q_dedup_components",  # r16
+    "q_keyby_agg_edit_size",  # r16
+    "q_pivot_user_event_values",  # r12
+    "q_posexplode_tokens",  # r12
+    "q_range_join_counts",  # r12
+    "q_rollup_event_value",  # r12
+    "q_salted_agg_edit_size",  # r12
+    "q_sessionize",  # r12
+    "q_setops_users",  # r12
+    "q_top_events_by_value",  # r12
+    "q_tpch_q10_returned_items",  # r12
+    "q_tpch_q13_order_histogram",  # r12
+    "q_tpch_q14_promo_share",  # r12
+    "q_tpch_q4_priority_with_big_lines",  # r12
+    "q_union_all_actions",  # r12
+    "q_unpivot_part_metrics",  # r12
+    "q_user_event_gaps",  # r12
+    "q_value_moment_stats",  # r12
+    "q_window_share_of_segment",  # r12
+    "q_asof_join",  # r13
+    "q_cohort_retention",  # r13
+    "q_contamination_check",  # r13
+    "q_corr_quantity_price",  # r13
+    "q_curation_funnel",  # r13
+    "q_data_quality_audit",  # r13
+    "q_date_functions",  # r13
+    "q_dedup_canonical",  # r13
+    "q_distribution_ranks",  # r13
+    "q_doc_chunks",  # r13
+    "q_duplicate_spans",  # r13
     # --- driver cutoff is 50; everything below is registry tail ---
 ]
 

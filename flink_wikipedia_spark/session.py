@@ -132,11 +132,10 @@ def get_spark(
         if env_parts is None:
             adaptive_initial = 512
 
-    # Streaming state store: the heap-backed default is ~2× faster while
-    # state fits in memory (measured: 33K vs 15K ev/s on the flagship at
-    # sf0.1); RocksDB is the right call once keyspace × window count
-    # outgrows the heap (bounded memory, spills to local disk). Opt in
-    # with SPARK_GRAFT_STATE_STORE=rocksdb for large-state deployments.
+    # Streaming state store: the heap-backed default is faster while state
+    # fits in memory; RocksDB is the right call once keyspace × window
+    # count outgrows the heap (bounded memory, spills to local disk). Opt
+    # in with SPARK_GRAFT_STATE_STORE=rocksdb for large-state deployments.
     state_store = os.environ.get("SPARK_GRAFT_STATE_STORE", "hdfs").lower()
     if state_store not in ("hdfs", "heap", "rocksdb"):
         # a typo here silently selecting heap is exactly the OOM the
@@ -155,6 +154,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # With AQE and coalescing on, batch exchanges start at
+        # initialPartitionNum, so this value is read only by streaming
+        # plans (AQE is off there): it is the state-store partition count
+        # of stateful operators, frozen into each new checkpoint. Streams
+        # with a bounded keyspace override it (streaming/pipeline.py).
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",

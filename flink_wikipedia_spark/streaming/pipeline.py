@@ -30,20 +30,73 @@ what the declared watermark says the author meant.
 
 from __future__ import annotations
 
+import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from flink_wikipedia_spark.functions.compat import ensure_session_conf
+from flink_wikipedia_spark.functions.constants import MINHASH_BANDS, MINHASH_NUM_HASHES
 from flink_wikipedia_spark.operators.core import (
     decode_edit_events,
     filter_human_main,
     project_with_ts,
 )
+from flink_wikipedia_spark.operators.dedup import minhash_band_col, minhash_sig_cols
+from flink_wikipedia_spark.operators.metrics import observe_decode_health, observe_quality_gate
+from flink_wikipedia_spark.operators.text import (
+    classifier_score_cols,
+    quality_score_cols,
+    with_lm_keep,
+)
 
 FLAGSHIP_WATERMARK = "1 second"  # DataStreamJob.java:63
 FLAGSHIP_WINDOW = "5 minutes"    # DataStreamJob.java:85
+
+# State partitions of the aggregates keyed (bounded dimension, window),
+# sized from the keyspace, not the cores: every partition is a state store
+# that commits a delta file and runs a task per micro-batch, even when
+# empty, and adds a sink part file when not. The flagship key
+# (domain, window) holds ~10^3 rows: ≤2 open 5-minute windows under the
+# 1 s watermark × the ~10^3 Wikimedia projects. Streams keyed on event
+# identity (dedup, curation) grow with event rate × watermark and keep
+# the session's count.
+BOUNDED_KEY_STATE_PARTITIONS = 1
+_START_LOCK = threading.Lock()
+
+
+def _start_stream(
+    result: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger: dict | None = None,
+    output_mode: str = "append",
+    state_partitions: int | None = None,
+) -> StreamingQuery:
+    """Start ``result`` into a foreachBatch ``sink`` (default trigger:
+    availableNow). ``state_partitions`` sets ``spark.sql.shuffle.partitions``
+    only while ``start()`` clones the session conf into the query; a new
+    checkpoint records it, a resumed one keeps its own. Starts are
+    serialized, so the override never leaks into a concurrent start."""
+    writer = (
+        result.writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger or {"availableNow": True}))
+    )
+    conf = result.sparkSession.conf
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        if state_partitions is None:
+            return writer.start()
+        prior = conf.get(key)
+        conf.set(key, str(state_partitions))
+        try:
+            return writer.start()
+        finally:
+            conf.set(key, prior)
 
 
 def flagship_transform(
@@ -93,27 +146,13 @@ def build_flagship_stream(
       checkpoints and silently loses in-flight windows on failure
       (SURVEY.md §4.2); we don't ship that mode.
     """
-    from flink_wikipedia_spark.functions.compat import ensure_session_conf
-
     ensure_session_conf(spark)
-    from flink_wikipedia_spark.operators.metrics import observe_decode_health
-
     # zero-rescan decode-health counters, surfaced per micro-batch in
     # StreamingQueryProgress.observedMetrics (operators/metrics.py)
     decoded, _ = observe_decode_health(decode_edit_events(source_df))
-    result = flagship_transform(
-        decoded,
-        watermark=watermark,
-        window_duration=window_duration,
-    )
-    trigger = trigger or {"availableNow": True}
-    return (
-        result.writeStream.outputMode(output_mode)
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trigger)
-        .start()
-    )
+    result = flagship_transform(decoded, watermark, window_duration)
+    return _start_stream(result, sink, checkpoint_dir, trigger, output_mode,
+                         state_partitions=BOUNDED_KEY_STATE_PARTITIONS)
 
 
 def build_dedup_stream(
@@ -128,18 +167,10 @@ def build_dedup_stream(
     dropDuplicatesWithinWatermark keeps state only inside the watermark
     horizon — bounded state at any input volume, the property plain
     dropDuplicates lacks in streaming."""
-    from flink_wikipedia_spark.functions.compat import ensure_session_conf
-
     ensure_session_conf(spark)
     decoded = decode_edit_events(source_df).withWatermark("ts", watermark)
     deduped = decoded.dropDuplicatesWithinWatermark(dedup_cols or ["id"])
-    return (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_stream(deduped, sink, checkpoint_dir)
 
 
 def sliding_window_counts(decoded: DataFrame, size: str = "10 minutes", slide: str = "5 minutes") -> DataFrame:
@@ -216,8 +247,6 @@ def build_enriched_stream(
     stream⋈static dim → filter → windowed edit-size per (region,
     window). Aggregating on the ENRICHED attribute (dim's `region`)
     proves the join ran inside the streaming plan, not in the sink."""
-    from flink_wikipedia_spark.functions.compat import ensure_session_conf
-
     ensure_session_conf(spark)
     decoded = decode_edit_events(source_df)
     enriched = enrich_with_static(decoded, dim, on)
@@ -234,13 +263,8 @@ def build_enriched_stream(
             F.col("w.end").alias("window_end"),
         )
     )
-    return (
-        result.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_stream(result, sink, checkpoint_dir,
+                         state_partitions=BOUNDED_KEY_STATE_PARTITIONS)
 
 
 DOC_SCHEMA = (
@@ -331,12 +355,7 @@ def build_curation_stream(
       drops contaminated docs without holding stream state;
     - the windowed count is the same partial-aggregate shape as the
       flagship."""
-    from flink_wikipedia_spark.functions.compat import ensure_session_conf
-    from flink_wikipedia_spark.operators.text import quality_score_cols
-
     ensure_session_conf(spark)
-    from flink_wikipedia_spark.operators.metrics import observe_quality_gate
-
     docs = decode_doc_records(source_df).filter(F.col("ts").isNotNull())
     scored, _ = observe_quality_gate(
         docs.select("*", *quality_score_cols("text"))
@@ -345,16 +364,12 @@ def build_curation_stream(
         "n_tokens", "mean_token_len", "stopword_ratio", "keep"
     )
     if classifier_gate:
-        from flink_wikipedia_spark.operators.text import classifier_score_cols
-
         kept = (
             kept.select("*", *classifier_score_cols("text"))
             .filter(F.col("keep") == 1)
             .drop("n_tokens", "score_sum", "score_mean", "keep")
         )
     if lm_gate:
-        from flink_wikipedia_spark.operators.text import with_lm_keep
-
         kept = (
             with_lm_keep(kept)
             .filter(F.col("lm_keep") == 1)
@@ -367,15 +382,6 @@ def build_curation_stream(
         .dropDuplicatesWithinWatermark(["fp"])
     )
     if neardup_gate:
-        from flink_wikipedia_spark.functions.constants import (
-            MINHASH_BANDS,
-            MINHASH_NUM_HASHES,
-        )
-        from flink_wikipedia_spark.operators.dedup import (
-            minhash_band_col,
-            minhash_sig_cols,
-        )
-
         deduped = deduped.select("*", *minhash_sig_cols("text")).select(
             "*",
             *[minhash_band_col(b).alias(f"_nd_band_{b}") for b in range(MINHASH_BANDS)],
@@ -399,10 +405,4 @@ def build_curation_stream(
             F.col("w.end").alias("window_end"),
         )
     )
-    return (
-        result.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_stream(result, sink, checkpoint_dir)

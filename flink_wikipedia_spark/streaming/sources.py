@@ -81,7 +81,14 @@ def socket_source(spark: SparkSession, host: str = "localhost", port: int = 9999
 
 def file_source(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Directory of JSON-lines text files — the replayable test twin of
-    the Kafka source (each line = one event payload)."""
+    the Kafka source (each line = one event payload).
+
+    Spark's file stream source replays files in modification-time order,
+    not name order. A directory copied with second-granularity mtimes
+    (e.g. through ``tar``) ties or reorders them, so a replay can run
+    event time backwards across files and the watermark then drops the
+    earlier events as late. Set increasing mtimes when staging a
+    replay."""
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -67,39 +67,37 @@ def test_driver_window_covers_every_family():
     in-window representative."""
     names = list(REGISTRY)[:50]
     assert names[0] == "q_windowed_edit_size"  # flagship = entry()
-    # Round-15 rotation (tools/rotate_window.py --changed
-    # q_bpe_merges q_bpe_encode q_bpe_vocab — see plans/__init__.py):
-    # the 1 name with no driver record (q_bpe_ids), the 3 names touched
-    # by the ADVICE-r14 persist-leak fix, the TWELVE family anchors,
-    # and the 33 stalest names — the 10 remaining r11-vintage queries
-    # plus 23 r12-vintage ones (alphabetical; the rest of the r12 band
-    # waits for r16).
+    # Current rotation (tools/rotate_window.py --changed ROUND_CHANGED,
+    # see plans/__init__.py): flagship, the changed names, the family
+    # anchors, then the stalest evidence — r12-vintage names
+    # alphabetically, then the r13 band.
     families = {
-        "new_names": ["q_bpe_ids"],
-        "changed": ["q_bpe_encode", "q_bpe_merges", "q_bpe_vocab"],
+        "changed": ["q_ann_ivf", "q_ann_ivfpq_refined",
+                    "q_embedding_neardup_lsh", "q_ivfpq_search",
+                    "q_lm_perplexity", "q_pq_codes", "q_semantic_dedup",
+                    "q_tfidf_top_terms", "q_tpch_q16_supplier_variety"],
         "anchors": ["q_filter_events", "q_json_extract", "q_word_count",
                     "q_pii_redact", "q_dedup_docs_exact",
                     "q_multimodal_decode", "q_similarity_lsh",
                     "q_join_orders_customer", "q_tpch_q1_pricing_summary",
                     "q_rank_functions", "q_dedup_components",
                     "q_keyby_agg_edit_size"],
-        "r11_vintage": [
-            "q_tpch_q15_top_supplier", "q_tpch_q20_excess_stock_suppliers",
-            "q_tpch_q22_dormant_accounts", "q_tpch_q2_min_cost_supplier",
-            "q_tpch_q3_shipping_priority", "q_tpch_q5_regional_revenue",
-            "q_tpch_q6_forecast_revenue", "q_tpch_q8_market_share",
-            "q_unpivot_event_daily", "q_vocab_ids",
-        ],
         "r12_vintage": [
-            "q_ann_ivf", "q_ann_ivfpq_refined", "q_antijoin_inactive_users",
-            "q_approx_distinct_users", "q_approx_percentile_value",
-            "q_c4_quality", "q_collect_user_lists", "q_cube_orders",
-            "q_distinct_users", "q_embedding_neardup_lsh", "q_fingerprint",
-            "q_gopher_quality", "q_hash_sample", "q_having_active_users",
-            "q_ivfpq_search", "q_lang_stats", "q_like_filter_parts",
-            "q_median_value", "q_minhash_dedup_clusters",
-            "q_minhash_signatures", "q_ngram_jaccard_pairs",
-            "q_pagerank_converged", "q_pagerank_parts_suppliers",
+            "q_pivot_user_event_values", "q_posexplode_tokens",
+            "q_range_join_counts", "q_rollup_event_value",
+            "q_salted_agg_edit_size", "q_sessionize", "q_setops_users",
+            "q_top_events_by_value", "q_tpch_q10_returned_items",
+            "q_tpch_q13_order_histogram", "q_tpch_q14_promo_share",
+            "q_tpch_q4_priority_with_big_lines", "q_union_all_actions",
+            "q_unpivot_part_metrics", "q_user_event_gaps",
+            "q_value_moment_stats", "q_window_share_of_segment",
+        ],
+        "r13_vintage": [
+            "q_asof_join", "q_cohort_retention", "q_contamination_check",
+            "q_corr_quantity_price", "q_curation_funnel",
+            "q_data_quality_audit", "q_date_functions",
+            "q_dedup_canonical", "q_distribution_ranks", "q_doc_chunks",
+            "q_duplicate_spans",
         ],
     }
     missing = {
@@ -167,7 +165,13 @@ def test_driver_window_covers_every_family():
 # The names whose builders changed in the CURRENT round — the
 # rotate_window rule-3 input. Updated each rotation, in the same commit
 # as plans/__init__._PRIORITY.
-ROUND_CHANGED = ["q_bpe_merges", "q_bpe_encode", "q_bpe_vocab"]
+ROUND_CHANGED = [
+    "q_tpch_q16_supplier_variety", "q_pq_codes", "q_ivfpq_search",
+    "q_ann_ivfpq_refined", "q_tfidf_top_terms", "q_embedding_neardup_lsh",
+    "q_lm_perplexity",
+    # ivf_assign now backquotes the column names it splices into SQL
+    "q_ann_ivf", "q_semantic_dedup",
+]
 
 
 def test_priority_window_is_rotation_tool_output():

@@ -795,3 +795,130 @@ def test_flagship_kill_and_resume_matches_batch(spark, tmp_path):
     assert len(want) == 8  # 4 windows x 2 domains
     # the kill really happened mid-stream (deterministically, epoch 3)
     assert killed_after == 3, killed_after
+
+
+def _state_partitions(query):
+    """numShufflePartitions of the query's first stateful operator, per
+    batch that reported one."""
+    progress = [json.loads(p.json) for p in query.recentProgress]
+    return [p["stateOperators"][0]["numShufflePartitions"] for p in progress if p["stateOperators"]]
+
+
+def test_flagship_stream_state_sized_to_keyspace(spark, tmp_path):
+    """The flagship's (domain, window) state runs in ONE partition,
+    whatever the session's count; the caller's session conf is left as
+    it was, and a stream keyed on event identity keeps the session's
+    count."""
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    write_file(src_dir, "000.json", [ev(1), ev(2, domain="de.wikipedia.org")], mtime=time.time() - 60)
+    flagship = build_flagship_stream(
+        spark, file_source(spark, src_dir), MemorySink(), str(tmp_path / "ck_flagship")
+    )
+    assert spark.conf.get(key) == session_parts
+    flagship.awaitTermination(120)
+    assert set(_state_partitions(flagship)) == {1}
+
+    dedup = build_dedup_stream(
+        spark, file_source(spark, src_dir), MemorySink(), str(tmp_path / "ck_dedup")
+    )
+    dedup.awaitTermination(120)
+    assert set(_state_partitions(dedup)) == {int(session_parts)}
+    assert spark.conf.get(key) == session_parts
+
+
+def test_flagship_resumes_checkpoint_at_its_partition_count(spark, tmp_path):
+    """Restart safety: a checkpoint written at 8 state partitions by the
+    direct start chain (the flagship before it was sized to its keyspace,
+    on an 8-partition session) resumes through build_flagship_stream at
+    8 — Spark restores the count from the offset log, since the state is
+    partitioned by it — and the two runs together equal the batch
+    flagship on the same files."""
+    from flink_wikipedia_spark.operators.metrics import observe_decode_health
+    from flink_wikipedia_spark.streaming.sinks import UpsertParquetSink
+
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    base = time.time() - 600
+    domains = ["en.wikipedia.org", "de.wikipedia.org", "fr.wikipedia.org"]
+
+    def add_files(indices):
+        for i in indices:
+            ts = f"2024-01-01T10:{3 * i + 1:02d}:30Z"
+            lines = [
+                ev(10 * i + j, domain=d, ts=ts, old=100, new=100 + 7 * i + j)
+                for j, d in enumerate(domains)
+            ]
+            write_file(src_dir, f"{i:03d}.json", lines, mtime=base + i * 10)
+
+    ck = str(tmp_path / "ck")
+    sink = UpsertParquetSink(str(tmp_path / "out"), key_cols=["domain", "window_start"])
+    add_files(range(4))
+    decoded, _ = observe_decode_health(
+        decode_edit_events(file_source(spark, src_dir, max_files_per_trigger=1))
+    )
+    spark.conf.set(key, "8")
+    try:
+        old = (
+            flagship_transform(decoded).writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, session_parts)
+    old.awaitTermination(120)
+    assert set(_state_partitions(old)) == {8}
+
+    add_files(range(4, 8))
+    resumed = build_flagship_stream(
+        spark,
+        file_source(spark, src_dir, max_files_per_trigger=1),
+        sink,
+        ck,
+        output_mode="update",
+    )
+    resumed.awaitTermination(120)
+    assert set(_state_partitions(resumed)) == {8}
+
+    got = sorted(
+        (r.domain, r.window_start, r.window_end, r.edit_size)
+        for r in sink.read_current(spark).collect()
+    )
+    batch = flagship_transform(decode_edit_events(spark.read.text(src_dir)))
+    want = sorted(
+        (r.domain, r.window_start, r.window_end, r.edit_size)
+        for r in batch.collect()
+    )
+    assert got == want
+    assert len(want) == 5 * len(domains)  # 8 files over windows 10:00–10:20
+
+
+def test_concurrent_stream_starts_keep_their_partition_counts(spark, tmp_path):
+    """Streams started from more threads than cores each get their own
+    state-partition count, and the session's count survives."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    key = "spark.sql.shuffle.partitions"
+    session_parts = int(spark.conf.get(key))
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    write_file(src_dir, "000.json", [ev(1), ev(2)], mtime=time.time() - 60)
+    builders = [build_flagship_stream, build_dedup_stream] * 4
+
+    def start(i):
+        return builders[i](spark, file_source(spark, src_dir), MemorySink(), str(tmp_path / f"ck{i}"))
+
+    with ThreadPoolExecutor(len(builders)) as pool:
+        queries = list(pool.map(start, range(len(builders))))
+    for q in queries:
+        q.awaitTermination(120)
+        assert not q.isActive
+    assert spark.conf.get(key) == str(session_parts)
+    want = {build_flagship_stream: 1, build_dedup_stream: session_parts}
+    assert [set(_state_partitions(q)) for q in queries] == [{want[b]} for b in builders]
