@@ -284,7 +284,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = 
     # string-branch rationale; identical Catalyst tree, bit-identical
     # results — pinned by the oracle gate and tests/test_operators.py).
     hms_sql = (
-        f"transform(filter(split(lower({text_col}), ' '), t -> t != ''), "
+        f"transform(filter(split(lower({sql_ident(text_col)}), ' '), t -> t != ''), "
         f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) "
         f"% {HM_MOD})"
     )

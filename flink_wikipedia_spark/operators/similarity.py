@@ -401,7 +401,7 @@ def pq_d2_cols(vec_col: Column | str, codebooks) -> list[Column]:
             cols.append(
                 F.expr(
                     f"transform(array({cents}), cv -> aggregate("
-                    f"zip_with(slice({vec_col}, {m * sub_dim + 1}, {sub_dim}),"
+                    f"zip_with(slice({sql_ident(vec_col)}, {m * sub_dim + 1}, {sub_dim}),"
                     f" cv, (x, c) -> (CAST(x AS DOUBLE) - c)"
                     f" * (CAST(x AS DOUBLE) - c)), 0.0D,"
                     f" (acc, v) -> acc + v))"

@@ -50,6 +50,7 @@ _PRIORITY = [
     "q_lm_perplexity",  # r14
     "q_pq_codes",  # r12
     "q_semantic_dedup",  # r12
+    "q_simhash",  # r13
     "q_tfidf_top_terms",  # r13
     "q_tpch_q16_supplier_variety",  # r13
     "q_filter_events",  # r16
@@ -91,7 +92,6 @@ _PRIORITY = [
     "q_dedup_canonical",  # r13
     "q_distribution_ranks",  # r13
     "q_doc_chunks",  # r13
-    "q_duplicate_spans",  # r13
     # --- driver cutoff is 50; everything below is registry tail ---
 ]
 

@@ -300,17 +300,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(table_schema(name)).parquet(path)
 
 
-# Scan-splittability cache: (path, stat-aggregate) -> row-group count,
-# capped (see _scan_row_groups_capped). Same driver-side-footer-only
+# Scan-splittability cache: (path, stat-aggregate, cap) -> row-group
+# count, capped (see _scan_row_groups_capped). Same driver-side-footer-only
 # posture as _TS_UNIT_CACHE.
-_ROW_GROUPS_CACHE: dict[tuple[str, int, int, int], int] = {}
+_ROW_GROUPS_CACHE: dict[tuple[str, int, int, int, int], int] = {}
 
 
 def _scan_row_groups_capped(path: str, cap: int) -> int:
     """Number of parquet row groups under ``path``, probing at most
     enough files to reach ``cap`` (a scan with ≥cap row groups is
     splittable enough — stop counting). Driver-side footer metadata
-    only, cached per (path, stat)."""
+    only, cached per (path, stat, cap): a count cut short at one cap
+    is never reused for a larger one. A cache hit saves the footer
+    reads, not the filesystem pass: the key stats every file."""
     import pyarrow.parquet as pq
 
     files = []
@@ -329,11 +331,12 @@ def _scan_row_groups_capped(path: str, cap: int) -> int:
             max((s.st_mtime_ns for s in stats), default=0),
             sum(s.st_size for s in stats),
             len(files),
+            cap,
         )
     else:
         files = [path]
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size, 1)
+        key = (path, st.st_mtime_ns, st.st_size, 1, cap)
     cached = _ROW_GROUPS_CACHE.get(key)
     if cached is not None:
         return cached

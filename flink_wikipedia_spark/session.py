@@ -157,8 +157,10 @@ def get_spark(
         # With AQE and coalescing on, batch exchanges start at
         # initialPartitionNum, so this value is read only by streaming
         # plans (AQE is off there): it is the state-store partition count
-        # of stateful operators, frozen into each new checkpoint. Streams
-        # with a bounded keyspace override it (streaming/pipeline.py).
+        # of stateful operators, frozen into each new checkpoint.
+        # Stream-only confs (this count for bounded keyspaces, the
+        # checkpoint manager by checkpoint scheme) are decided per query
+        # in one place, streaming/pipeline._start_stream.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",

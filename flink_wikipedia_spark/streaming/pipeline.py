@@ -64,7 +64,31 @@ FLAGSHIP_WINDOW = "5 minutes"    # DataStreamJob.java:85
 # identity (dedup, curation) grow with event rate × watermark and keep
 # the session's count.
 BOUNDED_KEY_STATE_PARTITIONS = 1
+
+# Checkpoint manager for checkpoints on the local filesystem. Spark's
+# default goes through Hadoop's FileContext, whose local filesystem forks
+# a process per readlink/chmod when the native Hadoop library is absent,
+# on every create and rename of every log, delta and .crc file. This one
+# writes the same files with fs.create and File.renameTo. Other schemes
+# (hdfs, s3a, ...) keep Spark's default.
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 _START_LOCK = threading.Lock()
+
+
+def _checkpoint_manager(spark: SparkSession, checkpoint_dir: str) -> str | None:
+    """The checkpoint manager class for ``checkpoint_dir``, or None for
+    Spark's default. The scheme is the path's own, else the session's
+    ``fs.defaultFS``; both are parsed, no filesystem client is created."""
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs
+    scheme = hadoop_fs.Path(checkpoint_dir).toUri().getScheme()
+    if scheme is None:
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = hadoop_fs.FileSystem.getDefaultUri(hadoop_conf).getScheme()
+    return LOCAL_CHECKPOINT_MANAGER if scheme == "file" else None
 
 
 def _start_stream(
@@ -76,10 +100,21 @@ def _start_stream(
     state_partitions: int | None = None,
 ) -> StreamingQuery:
     """Start ``result`` into a foreachBatch ``sink`` (default trigger:
-    availableNow). ``state_partitions`` sets ``spark.sql.shuffle.partitions``
-    only while ``start()`` clones the session conf into the query; a new
-    checkpoint records it, a resumed one keeps its own. Starts are
-    serialized, so the override never leaks into a concurrent start."""
+    availableNow). The one start chain of the package's streams; it
+    decides the two stream-only confs per query:
+
+    - ``state_partitions`` sets ``spark.sql.shuffle.partitions``, the
+      state-store partition count, from the keyspace: every partition
+      commits a delta and runs a task per batch. A new checkpoint
+      records it, a resumed one keeps its own.
+    - the checkpoint manager follows the checkpoint's scheme
+      (``_checkpoint_manager``): a ``file`` checkpoint is written
+      without forking a process per file operation. A manager the
+      caller set on the session is kept.
+
+    Both are set only while ``start()`` clones the session conf into the
+    query, then the caller's conf is restored. Starts are serialized, so
+    an override never leaks into a concurrent start."""
     writer = (
         result.writeStream.outputMode(output_mode)
         .foreachBatch(sink)
@@ -87,16 +122,24 @@ def _start_stream(
         .trigger(**(trigger or {"availableNow": True}))
     )
     conf = result.sparkSession.conf
-    key = "spark.sql.shuffle.partitions"
+    manager = _checkpoint_manager(result.sparkSession, checkpoint_dir)
+    overrides = {}
+    if state_partitions is not None:
+        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
     with _START_LOCK:
-        if state_partitions is None:
-            return writer.start()
-        prior = conf.get(key)
-        conf.set(key, str(state_partitions))
+        if manager is not None and conf.get(CHECKPOINT_MANAGER_KEY, None) is None:
+            overrides[CHECKPOINT_MANAGER_KEY] = manager
+        prior = {key: conf.get(key, None) for key in overrides}
+        for key, value in overrides.items():
+            conf.set(key, value)
         try:
             return writer.start()
         finally:
-            conf.set(key, prior)
+            for key, value in prior.items():
+                if value is None:
+                    conf.unset(key)
+                else:
+                    conf.set(key, value)
 
 
 def flagship_transform(

@@ -177,3 +177,21 @@ def test_events_ts_predicate_reaches_parquet_scan(spark):
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m, plan
     assert "GreaterThanOrEqual(ts" in m.group(1), m.group(1)
+
+
+def test_row_group_count_is_not_reused_across_caps(tmp_path):
+    """The scan spread's footer probe stops counting at ``cap``; a count
+    cut short at a small cap must not be served from the cache to a
+    later call with a larger cap."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_wikipedia_spark.schemas import _scan_row_groups_capped
+
+    # five one-row-group part files: the probe stops after the second
+    parts = tmp_path / "parts.parquet"
+    parts.mkdir()
+    for i in range(5):
+        pq.write_table(pa.table({"x": [i]}), str(parts / f"part-{i}.parquet"))
+    assert _scan_row_groups_capped(str(parts), cap=2) == 2
+    assert _scan_row_groups_capped(str(parts), cap=8) == 5

@@ -75,7 +75,8 @@ def test_driver_window_covers_every_family():
         "changed": ["q_ann_ivf", "q_ann_ivfpq_refined",
                     "q_embedding_neardup_lsh", "q_ivfpq_search",
                     "q_lm_perplexity", "q_pq_codes", "q_semantic_dedup",
-                    "q_tfidf_top_terms", "q_tpch_q16_supplier_variety"],
+                    "q_simhash", "q_tfidf_top_terms",
+                    "q_tpch_q16_supplier_variety"],
         "anchors": ["q_filter_events", "q_json_extract", "q_word_count",
                     "q_pii_redact", "q_dedup_docs_exact",
                     "q_multimodal_decode", "q_similarity_lsh",
@@ -97,7 +98,6 @@ def test_driver_window_covers_every_family():
             "q_corr_quantity_price", "q_curation_funnel",
             "q_data_quality_audit", "q_date_functions",
             "q_dedup_canonical", "q_distribution_ranks", "q_doc_chunks",
-            "q_duplicate_spans",
         ],
     }
     missing = {
@@ -169,8 +169,9 @@ ROUND_CHANGED = [
     "q_tpch_q16_supplier_variety", "q_pq_codes", "q_ivfpq_search",
     "q_ann_ivfpq_refined", "q_tfidf_top_terms", "q_embedding_neardup_lsh",
     "q_lm_perplexity",
-    # ivf_assign now backquotes the column names it splices into SQL
-    "q_ann_ivf", "q_semantic_dedup",
+    # ivf_assign, pq_d2_cols and simhash_fingerprints now backquote the
+    # column names they splice into SQL
+    "q_ann_ivf", "q_semantic_dedup", "q_simhash",
 ]
 
 
@@ -294,3 +295,41 @@ def test_q21_single_scan_per_fact(spark):
     plan = _plan(spark, "q_tpch_q21_sole_late_supplier")
     assert plan.count("lineitem.parquet") == 1, "lineitem scanned more than once"
     assert plan.count("orders.parquet") == 1, "orders scanned more than once"
+
+
+def _ancestors(plan: str, leaf: str) -> list[str]:
+    """Operators on the path from the first plan line containing
+    ``leaf`` up to the root, nearest first: walking up, each line indented
+    less than the last one kept is the next ancestor."""
+    lines = plan.splitlines()
+    start = next(i for i, line in enumerate(lines) if leaf in line)
+
+    def indent(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    chain, depth = [], indent(lines[start])
+    for line in reversed(lines[:start]):
+        if line.strip() and indent(line) < depth:
+            chain.append(line.strip(" :+-"))
+            depth = indent(line)
+    return chain
+
+
+def test_q16_partial_aggregate_below_first_exchange(spark):
+    """Q16 pin: the first aggregate above the lineitem scan is the
+    (brand, type, size, suppkey) partial of COUNT(DISTINCT), in the scan's
+    stage — no Exchange between them — in both the planned and the final
+    adaptive plan. A pre-distinct of the (partkey, suppkey) pairs, the
+    shape removed earlier, aggregates on the pair first and puts a full
+    shuffle of every pair below the join."""
+    name = "q_tpch_q16_supplier_variety"
+    df = REGISTRY[name].fn(spark, SF_DIR)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    for plan in (_plan(spark, name), final.split("== Initial Plan ==")[0]):
+        chain = _ancestors(plan, "lineitem.parquet")
+        first_agg = next(i for i, op in enumerate(chain) if "HashAggregate" in op)
+        assert not [op for op in chain[:first_agg] if "Exchange" in op], chain
+        assert "p_brand" in chain[first_agg] and "l_suppkey" in chain[first_agg], chain
+        assert any("Exchange" in op for op in chain[first_agg:]), chain

@@ -12,6 +12,10 @@ import time
 import pytest
 
 from flink_wikipedia_spark.streaming.pipeline import (
+    CHECKPOINT_MANAGER_KEY,
+    LOCAL_CHECKPOINT_MANAGER,
+    _checkpoint_manager,
+    _start_stream,
     build_dedup_stream,
     build_flagship_stream,
     flagship_transform,
@@ -804,9 +808,16 @@ def _state_partitions(query):
     return [p["stateOperators"][0]["numShufflePartitions"] for p in progress if p["stateOperators"]]
 
 
+def _log_manager(query):
+    """Class of the checkpoint manager behind the query's offset log."""
+    execution = query._jsq.streamingQuery()
+    return execution.offsetLog().fileManager().getClass().getName()
+
+
 def test_flagship_stream_state_sized_to_keyspace(spark, tmp_path):
     """The flagship's (domain, window) state runs in ONE partition,
-    whatever the session's count; the caller's session conf is left as
+    whatever the session's count, and its local checkpoint is written by
+    the FileSystem-based manager; the caller's session conf is left as
     it was, and a stream keyed on event identity keeps the session's
     count."""
     key = "spark.sql.shuffle.partitions"
@@ -818,8 +829,10 @@ def test_flagship_stream_state_sized_to_keyspace(spark, tmp_path):
         spark, file_source(spark, src_dir), MemorySink(), str(tmp_path / "ck_flagship")
     )
     assert spark.conf.get(key) == session_parts
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
     flagship.awaitTermination(120)
     assert set(_state_partitions(flagship)) == {1}
+    assert _log_manager(flagship) == LOCAL_CHECKPOINT_MANAGER
 
     dedup = build_dedup_stream(
         spark, file_source(spark, src_dir), MemorySink(), str(tmp_path / "ck_dedup")
@@ -827,6 +840,7 @@ def test_flagship_stream_state_sized_to_keyspace(spark, tmp_path):
     dedup.awaitTermination(120)
     assert set(_state_partitions(dedup)) == {int(session_parts)}
     assert spark.conf.get(key) == session_parts
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
 
 
 def test_flagship_resumes_checkpoint_at_its_partition_count(spark, tmp_path):
@@ -835,7 +849,11 @@ def test_flagship_resumes_checkpoint_at_its_partition_count(spark, tmp_path):
     on an 8-partition session) resumes through build_flagship_stream at
     8 — Spark restores the count from the offset log, since the state is
     partitioned by it — and the two runs together equal the batch
-    flagship on the same files."""
+    flagship on the same files.
+
+    It is also the cross-manager resume test: the direct start chain
+    writes the first run with Spark's default checkpoint manager, and
+    build_flagship_stream resumes it with the FileSystem-based one."""
     from flink_wikipedia_spark.operators.metrics import observe_decode_health
     from flink_wikipedia_spark.streaming.sinks import UpsertParquetSink
 
@@ -874,6 +892,7 @@ def test_flagship_resumes_checkpoint_at_its_partition_count(spark, tmp_path):
         spark.conf.set(key, session_parts)
     old.awaitTermination(120)
     assert set(_state_partitions(old)) == {8}
+    assert _log_manager(old) != LOCAL_CHECKPOINT_MANAGER
 
     add_files(range(4, 8))
     resumed = build_flagship_stream(
@@ -885,6 +904,7 @@ def test_flagship_resumes_checkpoint_at_its_partition_count(spark, tmp_path):
     )
     resumed.awaitTermination(120)
     assert set(_state_partitions(resumed)) == {8}
+    assert _log_manager(resumed) == LOCAL_CHECKPOINT_MANAGER
 
     got = sorted(
         (r.domain, r.window_start, r.window_end, r.edit_size)
@@ -920,5 +940,60 @@ def test_concurrent_stream_starts_keep_their_partition_counts(spark, tmp_path):
         q.awaitTermination(120)
         assert not q.isActive
     assert spark.conf.get(key) == str(session_parts)
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
     want = {build_flagship_stream: 1, build_dedup_stream: session_parts}
     assert [set(_state_partitions(q)) for q in queries] == [{want[b]} for b in builders]
+
+
+def test_checkpoint_manager_follows_scheme(spark, tmp_path):
+    """A local checkpoint (bare path or file: URI) gets the
+    FileSystem-based manager; hdfs and s3a keep Spark's default. A bare
+    path takes the scheme of fs.defaultFS. Nothing is contacted: the
+    hosts below do not exist."""
+    assert _checkpoint_manager(spark, str(tmp_path / "ck")) == LOCAL_CHECKPOINT_MANAGER
+    assert _checkpoint_manager(spark, f"file://{tmp_path}/ck") == LOCAL_CHECKPOINT_MANAGER
+    assert _checkpoint_manager(spark, "hdfs://nn/ck") is None
+    assert _checkpoint_manager(spark, "s3a://b/ck") is None
+    spark.conf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        assert _checkpoint_manager(spark, "/ck") is None
+        assert _checkpoint_manager(spark, f"file://{tmp_path}/ck") == LOCAL_CHECKPOINT_MANAGER
+    finally:
+        spark.conf.unset("fs.defaultFS")
+
+
+def test_local_checkpoint_file_set_matches_default_manager(spark, tmp_path):
+    """The FileSystem-based manager writes the same checkpoint files as
+    Spark's default: offsets, commits, source log, state deltas, their
+    checksums and the Hadoop .crc files. A manager the caller set on the
+    session is kept, and left set."""
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    base = time.time() - 600
+    for i in range(3):
+        ts = f"2024-01-01T10:{5 * i + 1:02d}:30Z"
+        write_file(src_dir, f"{i:03d}.json", [ev(i, ts=ts), ev(10 + i, domain="de.wikipedia.org", ts=ts)],
+                   mtime=base + i * 10)
+
+    def run(name):
+        result = flagship_transform(
+            decode_edit_events(file_source(spark, src_dir, max_files_per_trigger=1))
+        )
+        ck = tmp_path / name
+        query = _start_stream(result, MemorySink(), str(ck), state_partitions=1)
+        query.awaitTermination(120)
+        files = sorted(str(p.relative_to(ck)) for p in ck.rglob("*") if p.is_file())
+        return _log_manager(query), files
+
+    local_manager, local_files = run("ck_local")
+    default = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    spark.conf.set(CHECKPOINT_MANAGER_KEY, default)
+    try:
+        default_manager, default_files = run("ck_default")
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == default
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+    assert (local_manager, default_manager) == (LOCAL_CHECKPOINT_MANAGER, default)
+    assert local_files == default_files
+    assert any(f.endswith(".delta.crc") for f in local_files)
+    assert any(f.startswith("offsets/.") and f.endswith(".crc") for f in local_files)
