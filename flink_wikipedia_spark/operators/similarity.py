@@ -370,89 +370,50 @@ def train_ivfpq_index(
     return cents, cbs
 
 
-def matrix_literal(mat) -> Column:
-    """A 2-D numpy array as a plan-literal array<array<double>>."""
-    return F.array(
-        *[F.array(*[F.lit(float(v)) for v in row]) for row in mat]
-    )
-
-
-def pq_d2_cols(vec_col: Column | str, codebooks) -> list[Column]:
+def pq_d2_cols(vec_col: str, codebooks) -> list[Column]:
     """Per-subspace squared-L2 distance tables against a trained
     codebook array [M × K × sub_dim]: column m is a K-element array —
-    for a corpus vector its argmin is the PQ code, for a query vector
-    it IS the ADC lookup table. Pure literal expressions: index
-    application is a map, JVM codegen, no Python, no shuffle.
+    for a query vector it IS the ADC lookup table. Pure literal
+    expressions: index application is a map, JVM codegen, no Python,
+    no shuffle.
 
-    Pass the COLUMN NAME (str) where possible: the trained 8×16×8
-    codebook is ~1K literals, and the DSL form pays a py4j round trip
-    per literal (~1-2 s of driver time per plan build, round-9
-    profile); the string form is one JVM-side parse into the identical
-    Catalyst tree. repr(float) round-trips exactly through
-    Double.parseDouble, so trained values survive bit-exact."""
+    Built as one SQL string per subspace: the trained 8×16×8 codebook
+    is ~1K literals, and the DSL form pays a py4j round trip per literal
+    (~1-2 s of driver time per plan build); the string form is one
+    JVM-side parse into the identical Catalyst tree. repr(float)
+    round-trips exactly through Double.parseDouble, so trained values
+    survive bit-exact."""
     m_, k_, sub_dim = codebooks.shape
-    if isinstance(vec_col, str):
-        cols = []
-        for m in range(m_):
-            cents = ", ".join(
-                "array(" + ", ".join(f"{float(c)!r}D" for c in row) + ")"
-                for row in codebooks[m]
-            )
-            cols.append(
-                F.expr(
-                    f"transform(array({cents}), cv -> aggregate("
-                    f"zip_with(slice({sql_ident(vec_col)}, {m * sub_dim + 1}, {sub_dim}),"
-                    f" cv, (x, c) -> (CAST(x AS DOUBLE) - c)"
-                    f" * (CAST(x AS DOUBLE) - c)), 0.0D,"
-                    f" (acc, v) -> acc + v))"
-                ).alias(f"d2_{m}")
-            )
-        return cols
     cols = []
     for m in range(m_):
-        sub = F.slice(vec_col, m * sub_dim + 1, sub_dim)
-        cents = matrix_literal(codebooks[m])
+        cents = ", ".join(
+            "array(" + ", ".join(f"{float(c)!r}D" for c in row) + ")"
+            for row in codebooks[m]
+        )
         cols.append(
-            F.transform(
-                cents,
-                lambda cv: F.aggregate(
-                    F.zip_with(
-                        sub,
-                        cv,
-                        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
+            F.expr(
+                f"transform(array({cents}), cv -> aggregate("
+                f"zip_with(slice({sql_ident(vec_col)}, {m * sub_dim + 1}, {sub_dim}),"
+                f" cv, (x, c) -> (CAST(x AS DOUBLE) - c)"
+                f" * (CAST(x AS DOUBLE) - c)), 0.0D,"
+                f" (acc, v) -> acc + v))"
             ).alias(f"d2_{m}")
         )
     return cols
 
 
-def pq_code_cols(pq_m: int) -> list[Column]:
-    """Argmin over each d2 table (first-min = lowest code tie-break)."""
-    return [
-        (F.array_position(F.col(f"d2_{m}"), F.array_min(F.col(f"d2_{m}"))) - 1)
-        .cast("int")
-        .alias(f"code_{m}")
-        for m in range(pq_m)
-    ]
-
-
 def pq_encode_pandas(
     df: DataFrame, codebooks, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Arrow mapInPandas twin of pq_d2_cols + pq_code_cols for the
-    full-corpus encode scan: each Arrow batch becomes one vectorized
-    numpy distance computation ([B × sub] against [K × sub] per
-    subspace) instead of B interpreted expression folds. Map-only —
-    same shuffle profile as the expression form (none); the codebooks
-    ride the pickled closure (a few KB). argmin's first-min tie-break
-    matches pq_code_cols' array_position-of-min.
-
-    Kept alongside the expression form because the choice is measured,
-    not assumed — see SCALE.md's scorer A/B and ANN_ENCODER in
-    plans/queries_similarity.py for which one is registered."""
+    """The PQ encoder of the full-corpus scan: each vector's nearest
+    codebook entry per subspace as ``code_0..code_{M-1}`` (int), with
+    ``vec_col`` dropped and every other column kept. Arrow mapInPandas:
+    each Arrow batch is one vectorized numpy distance computation
+    ([B × sub] against [K × sub] per subspace), map-only, no shuffle;
+    the codebooks ride the pickled closure (a few KB). argmin breaks
+    ties toward the lowest code. SCALE.md's scorer A/B measured it
+    faster than interpreted expression folds over literal codebooks at
+    every scale factor tried (1.17-1.44×)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
 

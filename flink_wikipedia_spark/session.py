@@ -19,8 +19,7 @@ large cluster up front:
   and coalesces to the 64 MB advisory size from map-output statistics —
   the same session handles sf0.001 (coalesces to a few tasks) and sf100
   (keeps hundreds, bounding per-task sort/join state) with zero knobs.
-  ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` pins an exact static count when a
-  deployment needs one.
+  ``get_spark(shuffle_partitions=N)`` pins an exact static count.
 """
 
 from __future__ import annotations
@@ -124,13 +123,11 @@ def get_spark(
     # 19 M-row partitions into GC thrash and heap OOM under a static
     # count of 32, and 2.4× faster once partition count scaled with the
     # data. A 100 TB cluster tunes the SAME way: high initial, AQE
-    # coalesces. Explicit settings (arg or env) stay exact.
+    # coalesces. An explicit shuffle_partitions argument stays exact.
     adaptive_initial: int | None = None
     if shuffle_partitions is None:
-        env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        shuffle_partitions = int(env_parts) if env_parts else int(_DEFAULT_CPUS)
-        if env_parts is None:
-            adaptive_initial = 512
+        shuffle_partitions = int(_DEFAULT_CPUS)
+        adaptive_initial = 512
 
     # Streaming state store: the heap-backed default is faster while state
     # fits in memory; RocksDB is the right call once keyspace × window
@@ -194,10 +191,7 @@ def get_spark(
         # at 100 TB splits are capped by maxPartitionBytes exactly as
         # before, and tiny-file packing still charges 128 KB per file so
         # a million-small-file scan does not explode into tasks.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(128 * 1024)),
-        )
+        .config("spark.sql.files.openCostInBytes", str(128 * 1024))
         # --- Python boundary: always Arrow, never row-at-a-time ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # PySpark 4's DataFrame error-context capture (_with_origin)

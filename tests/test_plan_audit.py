@@ -8,9 +8,13 @@ reaches a benchmark.
 
 from __future__ import annotations
 
+import json
+import shutil
+from pathlib import Path
+
 import pytest
 
-from flink_wikipedia_spark.plans import REGISTRY
+from flink_wikipedia_spark.plans import REGISTRY, window
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -54,143 +58,124 @@ def test_no_cartesian_and_bnlj_only_allowlisted(spark, name):
         )
 
 
-def test_driver_window_covers_every_family():
-    """The driver's correctness gate reads only the FIRST 50 registry
-    entries (CORRECTNESS_r01 stopped at slot 50) — losing a family from
-    the window silently downgrades it to 'untested' in the next round's
-    verdict. Pin the composition.
+# Every operator family keeps AT LEAST ONE in-window representative
+# each round, whatever the rotation picks: a family regression must
+# never be able to hide behind rotation.
+SEMANTIC_FAMILIES = {
+    "text": ["q_word_count", "q_lang_stats", "q_posexplode_tokens",
+             "q_gopher_quality", "q_c4_quality", "q_fingerprint"],
+    "curation": ["q_pii_redact", "q_hash_sample",
+                 "q_stratified_sample", "q_shuffle_shards"],
+    "dedup": ["q_dedup_docs_exact", "q_minhash_dedup_clusters",
+              "q_minhash_signatures", "q_ngram_jaccard_pairs"],
+    "similarity": ["q_ann_ivf", "q_ivfpq_search",
+                   "q_embedding_neardup_lsh", "q_semantic_dedup",
+                   "q_similarity_lsh"],
+    "multimodal": ["q_multimodal_decode", "q_multimodal_frames"],
+    "streaming_twin": ["q_sessionize", "q_keyby_agg_edit_size",
+                       "q_windowed_edit_size"],
+    "relational": ["q_cube_orders", "q_rollup_event_value",
+                   "q_setops_users", "q_pivot_user_event_values",
+                   "q_antijoin_inactive_users",
+                   "q_join_orders_customer", "q_asof_join",
+                   "q_gapfill_rollup", "q_snapshot_merge"],
+    "tpch": ["q_tpch_q10_returned_items", "q_tpch_q13_order_histogram",
+             "q_tpch_q14_promo_share",
+             "q_tpch_q4_priority_with_big_lines",
+             "q_tpch_q1_pricing_summary", "q_tpch_q7_volume_shipping",
+             "q_tpch_q9_nation_year_profit",
+             "q_tpch_q16_supplier_variety",
+             "q_tpch_q17_small_quantity_revenue",
+             "q_tpch_q18_large_orders",
+             "q_tpch_q19_disjunctive_revenue",
+             "q_tpch_q21_sole_late_supplier"],
+    "functions": ["q_window_share_of_segment", "q_user_event_gaps",
+                  "q_median_value", "q_value_moment_stats",
+                  "q_rank_functions", "q_running_total",
+                  "q_window_navigation", "q_distribution_ranks",
+                  "q_date_functions", "q_corr_quantity_price"],
+    "iterative_graph": ["q_pagerank_parts_suppliers",
+                        "q_pagerank_converged", "q_dedup_components"],
+    "core": ["q_filter_events", "q_json_extract",
+             "q_windowed_edit_size"],
+}
 
-    NOTE: this test pins the CURRENT round's rotation and is updated in
-    the same commit as plans/__init__._PRIORITY — its job is to catch a
-    registration-order regression between rotations, plus the standing
-    semantic invariant that every operator family keeps at least one
-    in-window representative."""
-    names = list(REGISTRY)[:50]
-    assert names[0] == "q_windowed_edit_size"  # flagship = entry()
-    # Current rotation (tools/rotate_window.py --changed ROUND_CHANGED,
-    # see plans/__init__.py): flagship, the changed names, the family
-    # anchors, then the stalest evidence — r12-vintage names
-    # alphabetically, then the r13 band.
-    families = {
-        "changed": ["q_ann_ivf", "q_ann_ivfpq_refined",
-                    "q_embedding_neardup_lsh", "q_ivfpq_search",
-                    "q_lm_perplexity", "q_pq_codes", "q_semantic_dedup",
-                    "q_simhash", "q_tfidf_top_terms",
-                    "q_tpch_q16_supplier_variety"],
-        "anchors": ["q_filter_events", "q_json_extract", "q_word_count",
-                    "q_pii_redact", "q_dedup_docs_exact",
-                    "q_multimodal_decode", "q_similarity_lsh",
-                    "q_join_orders_customer", "q_tpch_q1_pricing_summary",
-                    "q_rank_functions", "q_dedup_components",
-                    "q_keyby_agg_edit_size"],
-        "r12_vintage": [
-            "q_pivot_user_event_values", "q_posexplode_tokens",
-            "q_range_join_counts", "q_rollup_event_value",
-            "q_salted_agg_edit_size", "q_sessionize", "q_setops_users",
-            "q_top_events_by_value", "q_tpch_q10_returned_items",
-            "q_tpch_q13_order_histogram", "q_tpch_q14_promo_share",
-            "q_tpch_q4_priority_with_big_lines", "q_union_all_actions",
-            "q_unpivot_part_metrics", "q_user_event_gaps",
-            "q_value_moment_stats", "q_window_share_of_segment",
-        ],
-        "r13_vintage": [
-            "q_asof_join", "q_cohort_retention", "q_contamination_check",
-            "q_corr_quantity_price", "q_curation_funnel",
-            "q_data_quality_audit", "q_date_functions",
-            "q_dedup_canonical", "q_distribution_ranks", "q_doc_chunks",
-        ],
-    }
-    missing = {
-        fam: [q for q in qs if q not in names]
-        for fam, qs in families.items()
-        if any(q not in names for q in qs)
-    }
-    assert not missing, f"driver-window regression: {missing}"
-    # the groups that define the rotation must union to the full window
-    rotation = {"q_windowed_edit_size"}
-    for fam in families:
-        rotation.update(families[fam])
-    assert rotation == set(names), (
-        f"window/rotation mismatch: extra={set(names) - rotation} "
-        f"unlisted={rotation - set(names)}"
-    )
-    # semantic coverage: every operator family keeps AT LEAST ONE
-    # in-window representative each round, whatever the rotation picks
-    # (a family regression must never be able to hide behind rotation)
-    semantic = {
-        "text": ["q_word_count", "q_lang_stats", "q_posexplode_tokens",
-                 "q_gopher_quality", "q_c4_quality", "q_fingerprint"],
-        "curation": ["q_pii_redact", "q_hash_sample",
-                     "q_stratified_sample", "q_shuffle_shards"],
-        "dedup": ["q_dedup_docs_exact", "q_minhash_dedup_clusters",
-                  "q_minhash_signatures", "q_ngram_jaccard_pairs"],
-        "similarity": ["q_ann_ivf", "q_ivfpq_search",
-                       "q_embedding_neardup_lsh", "q_semantic_dedup",
-                       "q_similarity_lsh"],
-        "multimodal": ["q_multimodal_decode", "q_multimodal_frames"],
-        "streaming_twin": ["q_sessionize", "q_keyby_agg_edit_size",
-                           "q_windowed_edit_size"],
-        "relational": ["q_cube_orders", "q_rollup_event_value",
-                       "q_setops_users", "q_pivot_user_event_values",
-                       "q_antijoin_inactive_users",
-                       "q_join_orders_customer", "q_asof_join",
-                       "q_gapfill_rollup", "q_snapshot_merge"],
-        "tpch": ["q_tpch_q10_returned_items", "q_tpch_q13_order_histogram",
-                 "q_tpch_q14_promo_share",
-                 "q_tpch_q4_priority_with_big_lines",
-                 "q_tpch_q1_pricing_summary", "q_tpch_q7_volume_shipping",
-                 "q_tpch_q9_nation_year_profit",
-                 "q_tpch_q16_supplier_variety",
-                 "q_tpch_q17_small_quantity_revenue",
-                 "q_tpch_q18_large_orders",
-                 "q_tpch_q19_disjunctive_revenue",
-                 "q_tpch_q21_sole_late_supplier"],
-        "functions": ["q_window_share_of_segment", "q_user_event_gaps",
-                      "q_median_value", "q_value_moment_stats",
-                      "q_rank_functions", "q_running_total",
-                      "q_window_navigation", "q_distribution_ranks",
-                      "q_date_functions", "q_corr_quantity_price"],
-        "iterative_graph": ["q_pagerank_parts_suppliers",
-                            "q_pagerank_converged", "q_dedup_components"],
-        "core": ["q_filter_events", "q_json_extract",
-                 "q_windowed_edit_size"],
-    }
-    unrepresented = [fam for fam, qs in semantic.items()
+
+def _assert_window_invariants(
+    names: list[str], newest: dict[str, int], changed: dict[str, int]
+) -> None:
+    """The composition the rotation policy guarantees for any history."""
+    assert names[0] == window.FLAGSHIP  # flagship = entry()
+    assert len(names) == len(set(names)) == window.WINDOW, names
+    missing_anchors = [n for n in window.FAMILY_ANCHORS if n not in names]
+    assert not missing_anchors, f"family anchors out of window: {missing_anchors}"
+    unexpired = [n for n, rnd in changed.items() if newest.get(n, 0) < rnd]
+    missing_changed = [n for n in unexpired if n not in names]
+    assert not missing_changed, f"unverified changed names out of window: {missing_changed}"
+    unrepresented = [fam for fam, qs in SEMANTIC_FAMILIES.items()
                      if not any(q in names for q in qs)]
     assert not unrepresented, (
         f"operator families with NO in-window representative: {unrepresented}"
     )
 
 
-# The names whose builders changed in the CURRENT round — the
-# rotate_window rule-3 input. Updated each rotation, in the same commit
-# as plans/__init__._PRIORITY.
-ROUND_CHANGED = [
-    "q_tpch_q16_supplier_variety", "q_pq_codes", "q_ivfpq_search",
-    "q_ann_ivfpq_refined", "q_tfidf_top_terms", "q_embedding_neardup_lsh",
-    "q_lm_perplexity",
-    # ivf_assign, pq_d2_cols and simhash_fingerprints now backquote the
-    # column names they splice into SQL
-    "q_ann_ivf", "q_semantic_dedup", "q_simhash",
-]
+def test_driver_window_covers_every_family():
+    """The driver's correctness gate reads only the FIRST 50 registry
+    entries — losing a family from the window silently downgrades it to
+    'untested' in the next round's verdict. The registry order is the
+    rotation over the committed CORRECTNESS history by construction;
+    this checks its composition."""
+    _assert_window_invariants(
+        list(REGISTRY)[: window.WINDOW], window.load_history(), window.CHANGED
+    )
 
 
-def test_priority_window_is_rotation_tool_output():
-    """plans/__init__._PRIORITY must be EXACTLY what
-    tools/rotate_window.py computes from the CORRECTNESS_r*.json
-    history + this round's changed-names list — the rotation is
-    mechanical as of r12, and a hand-edited window (or a stale one
-    after the driver writes a new CORRECTNESS file at round start)
-    fails here, forcing the re-rotation the standing policy requires."""
-    import os
-    import sys
+def test_window_rotates_after_a_new_driver_round(tmp_path):
+    """Simulated driver round on a copy of the committed history: the
+    CHANGED names are due next round, the driver records the resulting
+    window as passing except one changed name. The next window drops
+    the passed changed names, keeps the failed one, and still holds
+    every invariant — with no edit to the policy."""
+    for path in Path(window.HISTORY_DIR).glob("CORRECTNESS_r*.json"):
+        shutil.copy(path, tmp_path)
+    newest = window.load_history(str(tmp_path))
+    next_round = max(newest.values()) + 1
+    changed = dict.fromkeys(window.CHANGED, next_round)
+    today = window.rotate(REGISTRY, newest, changed)
+    failed = sorted(changed)[0]
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo))
-    from tools.rotate_window import load_history, load_registry, rotate
+    def record(name: str) -> dict:
+        if name == failed:
+            return {"hash_match": False, "spark_rows": 1, "err": None}
+        if REGISTRY[name].oracle is None:
+            return {"hash_match": None, "spark_rows": 1, "err": "no_oracle"}
+        return {"hash_match": True, "spark_rows": 1, "err": None}
 
-    expected = rotate(load_registry(), load_history(repo), ROUND_CHANGED)
-    assert expected == list(REGISTRY)[:50]
+    (tmp_path / f"CORRECTNESS_r{next_round:02d}.json").write_text(
+        json.dumps({n: record(n) for n in today})
+    )
+    newest = window.load_history(str(tmp_path))
+    rotated = window.rotate(REGISTRY, newest, changed)
+
+    _assert_window_invariants(rotated, newest, changed)
+    passed_changed = [n for n in changed if n != failed]
+    assert all(newest[n] == next_round for n in passed_changed)
+    assert not [n for n in passed_changed if n in rotated], rotated
+    assert failed in rotated
+    assert rotated != today
+
+
+def test_window_without_history_is_valid():
+    """An executor importing a shipped archive has no history files:
+    the order is still a full window with the flagship first."""
+    rotated = window.rotate(REGISTRY, {})
+    assert rotated[0] == window.FLAGSHIP
+    assert len(set(rotated)) == window.WINDOW
+
+
+def test_window_policy_rejects_unknown_names():
+    with pytest.raises(RuntimeError, match="q_not_registered"):
+        window.rotate(REGISTRY, {}, {"q_not_registered": 1})
 
 
 def test_no_oracle_uses_nonportable_decimal_to_double():
